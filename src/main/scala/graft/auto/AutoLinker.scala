@@ -29,7 +29,20 @@ import graft.train.Estimation
   *     (`searchStrategy = "adaptive"` keeps the earlier perturb-the-top-quartile
   *     TPE-lite; `"random"` recovers pure random search);
   *   - no metastore temp tables to GC (Y15) — intermediates are DataFrames;
-  *   - run log returned as a DataFrame instead of MLflow calls (Y19).
+  *   - no run log yet: the reference logs every trial to MLflow; a per-trial
+  *     run log (Y19) is not built, and [[Result.trials]] is all that is kept.
+  *
+  * Per-trial query budget: a trial runs two Spark queries when connected
+  * components take their local path — the training pass (every training rule's
+  * agreement patterns plus the u pairs' patterns, [[Estimation.train]]) and the
+  * thresholded-edge probe, which carries each endpoint's attributes so the
+  * union-find and the information-gain metric both run on the driver
+  * ([[clusterAndScore]]). The probe holds at most 1M / (2 + 2k) edges for k
+  * attributes (the 1M strings connected components' own local path may hold);
+  * above that, or when components run distributed, the trial runs
+  * [[ConnectedComponents.assignClusters]] and the one-query distributed metric.
+  * The driver path counts each matched record once, so uids must be unique:
+  * the search checks this in its row count and fails otherwise.
   *
   * When `trueLabelCol` is given, every trial also computes the supervised confusion
   * and clustering metrics against it (reference autolinker.py:591-621), recorded on
@@ -107,7 +120,7 @@ object AutoLinker {
     val cleaned = graft.util.Partitioning
       .spreadNarrowScan(Cleaning.cleanColumns(stringified, attrs, cleaningMode))
       .cache()
-    val n = cleaned.count()
+    val n = countUnique(cleaned, uidCol)
 
     val ruleChoices = candidateRuleOverride.getOrElse(
       candidateRules(cleaned, n, attrs, ruleCombinationSize, maxOrSize,
@@ -172,7 +185,7 @@ object AutoLinker {
     val cleanedR = graft.util.Partitioning
       .spreadNarrowScan(Cleaning.cleanColumns(rSel, attrs, cleaningMode)).cache()
     val union = cleanedL.unionByName(cleanedR).cache()
-    val n = union.count()
+    val n = countUnique(union, uidCol)
 
     val ruleChoices = candidateRuleOverride.getOrElse(
       candidateRules(union, n, attrs, ruleCombinationSize, maxOrSize,
@@ -183,6 +196,18 @@ object AutoLinker {
       maxEvals, rnd, searchStrategy, clusterThreshold,
       uTargetPairs = math.min(n * 4, 100000L), trueLabelCol, uDeterministicOrder,
       nRows = n)
+  }
+
+  /** Row count of the search's records in the same job that checks the uid is
+    * non-null and unique — Splink's precondition, and the driver metric's: it
+    * counts each matched record once ([[clusterAndScore]]).
+    */
+  private def countUnique(df: DataFrame, uidCol: String): Long = {
+    val row = df.agg(count(lit(1)), countDistinct(col(uidCol))).collect()(0)
+    require(row.getLong(0) == row.getLong(1),
+      s"auto-link needs a non-null, unique `$uidCol`: ${row.getLong(0)} records " +
+        s"carry ${row.getLong(1)} distinct ids")
+    row.getLong(0)
   }
 
   /** Y3 — candidate blocking rules from a ≤10k sample, filtered by estimated cost. */
@@ -350,11 +375,8 @@ object AutoLinker {
         case Some(right) => FellegiSunter.predictLink(trainDf, right, uidCol, model)
         case None => FellegiSunter.predict(trainDf, uidCol, model)
       }
-      val edges = predictions
-        .filter(col("match_probability") >= clusterThreshold)
-        .select(col("uid_l").as("src"), col("uid_r").as("dst"))
-      val clusters = ConnectedComponents.assignClusters(clusterBase, uidCol, edges)
-      val metric = EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase)
+      val (clusters, metric) = clusterAndScore(predictions, clusterThreshold, clusterBase,
+        uidCol, attrs, adjustedBase, driverEdgeCap(attrs.size))
       val supervised = trueLabelCol.map { label =>
         val labelDf = clusterBase.select(col(uidCol), col(label))
         rowToMap(PairwiseMetrics.confusionMetrics(
@@ -407,6 +429,58 @@ object AutoLinker {
 
     val (b, clusters, predictions) = best.get
     Result(b, clusters, predictions, past.toSeq)
+  }
+
+  /** Driver edge cap of [[clusterAndScore]] for `k` attributes: each edge holds
+    * 2 + 2k strings, and connected components' own local path may hold 1M.
+    */
+  private[graft] def driverEdgeCap(k: Int): Long = 1000000L / (2 + 2 * k)
+
+  /** A trial's clustering and its information-gain metric. One probe collects at
+    * most `edgeCap` thresholded edges with both endpoints' attributes; when they
+    * all fit, union-find ([[ConnectedComponents.localComponents]]) and the metric
+    * ([[EntropyMetrics.informationGainPowerRatioLocal]]) run on the driver and
+    * the clusters frame stays lazy. Otherwise [[ConnectedComponents.assignClusters]]
+    * (local or distributed by `ccLocalThreshold`) and the distributed metric run.
+    * Either way the metric equals `informationGainPowerRatio` over the returned
+    * clusters bit for bit; the metric needs unique uids (see [[countUnique]]).
+    */
+  private[graft] def clusterAndScore(
+      predictions: DataFrame,
+      threshold: Double,
+      clusterBase: DataFrame,
+      uidCol: String,
+      attrs: Seq[String],
+      adjustedBase: Int,
+      edgeCap: Long,
+      ccLocalThreshold: Long = 500000L): (DataFrame, Double) = {
+    val cap = math.min(edgeCap, ccLocalThreshold).toInt
+    val edges = predictions.filter(col("match_probability") >= threshold)
+    val probe = edges
+      .filter(col("uid_l") =!= col("uid_r"))
+      .select((Seq("uid_l", "uid_r") ++ attrs.map(a => s"${a}_l") ++ attrs.map(a => s"${a}_r"))
+        .map(col): _*)
+      .limit(cap + 1).collect()
+    if (probe.length <= cap) {
+      val k = attrs.size
+      val values = scala.collection.mutable.HashMap.empty[String, Array[String]]
+      probe.foreach { r =>
+        values.getOrElseUpdate(r.getString(0), Array.tabulate(k)(i => r.getString(2 + i)))
+        values.getOrElseUpdate(r.getString(1), Array.tabulate(k)(i => r.getString(2 + k + i)))
+      }
+      val mapping = ConnectedComponents.localComponents(
+        probe.map(r => (r.getString(0), r.getString(1))))
+      val metric = EntropyMetrics.informationGainPowerRatioLocal(
+        mapping.map { case (node, cid) => (cid, values(node)) }, k, adjustedBase)
+      val spark = clusterBase.sparkSession
+      import spark.implicits._
+      (ConnectedComponents.withClusterIds(clusterBase, uidCol,
+        mapping.toDF("node", "cluster_id")), metric)
+    } else {
+      val clusters = ConnectedComponents.assignClusters(clusterBase, uidCol,
+        edges.select(col("uid_l").as("src"), col("uid_r").as("dst")), ccLocalThreshold)
+      (clusters, EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase))
+    }
   }
 
   /** First row of a 1-row metric frame as name → double (longs widened). */

@@ -17,6 +17,14 @@ import org.apache.spark.sql.functions._
   * (count + order-independent hash sum) instead of a full `except`. Small edge sets
   * (bounded by `localThreshold`) short-circuit to a driver union-find — ~log(diameter)
   * rounds of shuffles are pure overhead when the deduped graph fits in tens of MB.
+  *
+  * Driver memory: the local path holds at most `localThreshold` edges of two
+  * strings each (1M strings at the default). The auto-link search reuses
+  * [[localComponents]] on its own probe, which also carries each endpoint's k
+  * attribute values, so it caps that probe at 1M / (2 + 2k) edges — the same
+  * string budget — and above it falls back to [[assignClusters]]. Under the cap
+  * a trial's clustering and metric cost that one probe query; the trial's other
+  * query is its training pass (see `AutoLinker`).
   */
 object ConnectedComponents {
 
@@ -47,8 +55,10 @@ object ConnectedComponents {
     val cap = math.min(localThreshold, Int.MaxValue.toLong - 1).toInt
     val probe = dedup.limit(cap + 1).collect()
     if (probe.length <= cap) {
-      return localRun(edges.sparkSession,
-        probe.map(r => (r.getString(0), r.getString(1))))
+      val spark = edges.sparkSession
+      import spark.implicits._
+      return localComponents(probe.map(r => (r.getString(0), r.getString(1))))
+        .toDF("node", "cluster_id")
     }
 
     val tracker = new graft.util.CheckpointTracker(edges.sparkSession)
@@ -74,13 +84,13 @@ object ConnectedComponents {
   }
 
   /** Driver union-find (path compression + union by rank) over a bounded edge list;
-    * cluster id = lexicographic minimum node id of the component, exactly as the
-    * distributed fixpoint produces.
+    * cluster id = code-point minimum node id of the component, exactly as the
+    * distributed fixpoint produces. Returns `(node, cluster_id)` for every node of
+    * `pairs`, in first-seen order. The caller bounds the list: [[run]] by its
+    * `localThreshold`, the auto-link search by its driver edge cap.
     */
-  private def localRun(
-      spark: org.apache.spark.sql.SparkSession,
-      pairs: Array[(String, String)]): DataFrame = {
-    import spark.implicits._
+  def localComponents(
+      pairs: scala.collection.Seq[(String, String)]): IndexedSeq[(String, String)] = {
     val index = scala.collection.mutable.HashMap.empty[String, Int]
     val nodes = scala.collection.mutable.ArrayBuffer.empty[String]
     def idOf(s: String): Int = index.getOrElseUpdate(s, { nodes += s; nodes.length - 1 })
@@ -109,7 +119,6 @@ object ConnectedComponents {
       if (!minOfRoot.get(r).exists(m => cpCompare(m, s) <= 0)) minOfRoot(r) = s
     }
     nodes.indices.map(i => (nodes(i), minOfRoot(find(i))))
-      .toDF("node", "cluster_id")
   }
 
   /** Code-point order — identical to Spark's UTF8String binary (UTF-8 byte) order.
@@ -192,13 +201,21 @@ object ConnectedComponents {
   /** Attaches records: adds `cluster_id` (own uid for singletons) — the reference's
     * output shape (input ∪ cluster_id, autolinker.py:133,195-196).
     */
-  def assignClusters(records: DataFrame, uid: String, edges: DataFrame): DataFrame = {
-    val mapping = run(edges)
+  def assignClusters(
+      records: DataFrame,
+      uid: String,
+      edges: DataFrame,
+      localThreshold: Long = 500000L): DataFrame =
+    withClusterIds(records, uid, run(edges, localThreshold = localThreshold))
+
+  /** Attaches a `node → cluster_id` mapping (from [[run]] or [[localComponents]])
+    * to the records, as [[assignClusters]] does.
+    */
+  def withClusterIds(records: DataFrame, uid: String, mapping: DataFrame): DataFrame =
     records
       .join(mapping, records(uid).cast("string") === mapping("node"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col(uid).cast("string")))
       .drop("node")
-  }
 
   /** Per-cluster audit stats over an assignment and its edge set — Splink's cluster
     * metrics natively: node count, distinct undirected edge count, and graph density

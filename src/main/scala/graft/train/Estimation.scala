@@ -106,8 +106,13 @@ object Estimation {
   /** u[col][gamma] from a prebuilt pair table (see [[uSamplePairs]]). */
   def estimateUFromPairs(
       pairs: DataFrame,
-      specs: Seq[ComparisonSpec]): Map[String, Array[Double]] = {
-    val counts = gammaCounts(Comparisons.withGammas(pairs, specs), specs)
+      specs: Seq[ComparisonSpec]): Map[String, Array[Double]] =
+    uFromCounts(gammaCounts(Comparisons.withGammas(pairs, specs), specs), specs)
+
+  /** u[col][gamma] from per-column gamma counts of random pairs. */
+  private def uFromCounts(
+      counts: Map[String, Map[Int, Long]],
+      specs: Seq[ComparisonSpec]): Map[String, Array[Double]] =
     specs.map { s =>
       val byGamma = counts.getOrElse(s.column, Map.empty)
       val total = byGamma.collect { case (g, c) if g >= 0 => c }.sum.toDouble
@@ -116,7 +121,16 @@ object Estimation {
       }.toArray
       s.column -> u
     }.toMap
-  }
+
+  /** The per-column gamma counts [[gammaCounts]] computes, marginalized from a
+    * full-gamma pattern table (gamma vectors in `specs` order, with counts).
+    */
+  private def marginalCounts(
+      patterns: Array[(Array[Int], Long)],
+      specs: Seq[ComparisonSpec]): Map[String, Map[Int, Long]] =
+    specs.indices.map { k =>
+      specs(k).column -> patterns.groupMapReduce(_._1(k))(_._2)(_ + _)
+    }.toMap
 
   /** J5 — EM over pairs blocked by `trainingRule`. Columns appearing in the training
     * rule are held fixed for this round (their gammas are saturated by construction —
@@ -374,25 +388,33 @@ object Estimation {
     // (nRows) — the prior λ0 = 1/N needs N once, not one count job per trial
     val n = nRows.getOrElse(uSource.count())
     val lambda0 = prior(n)
-    // a search loop training many candidate models passes the prebuilt sampled
-    // pair table (uPairs) — the sample/sort/index pipeline is spec-independent and
-    // re-running it per trial is pure waste
-    val uSampled = uPairs match {
-      case Some(p) => estimateUFromPairs(p, specs)
-      case None => estimateU(uSource, uid, specs, uTargetPairs, uHashShuffle)
+    // the per-rule EM sessions chain only the scalar λ — the expensive part (pair
+    // join + gamma aggregation) is rule-independent, so collect every rule's
+    // pattern table in ONE Spark pass and run the chained driver EMs over the
+    // collected arrays; falls back to per-rule emTrain when the combined table
+    // exceeds the driver cap (the distributed path handles pathological widths).
+    // A search loop training many candidate models passes the prebuilt sampled
+    // pair table (uPairs): it rides the same pass as pseudo-rule URule, and u is
+    // its pattern counts marginalized per column — the integers gammaCounts
+    // would produce, so u is the same double. Over the cap, u and the rule
+    // tables are computed separately, exactly as without uPairs.
+    val parsedRules = trainingRules.map(graft.blocking.BlockingRule.parse)
+    def rulesOnly = batchPatternTables(df, uid, specs, parsedRules, linkRight, None)
+    val (uSampled, batched) = uPairs match {
+      case Some(p) =>
+        batchPatternTables(df, uid, specs, parsedRules, linkRight, Some(p)) match {
+          case Some(tables) =>
+            (uFromCounts(marginalCounts(tables.getOrElse(URule, Array.empty), specs), specs),
+              Some(tables - URule))
+          case None => (estimateUFromPairs(p, specs), rulesOnly)
+        }
+      case None => (estimateU(uSource, uid, specs, uTargetPairs, uHashShuffle), rulesOnly)
     }
 
     val mEstimates = scala.collection.mutable.Map[String, List[Array[Double]]]()
     val uEstimates = scala.collection.mutable.Map[String, List[Array[Double]]](
       specs.map(s => s.column -> List(uSampled(s.column))): _*)
     var lambda = lambda0
-    // the per-rule EM sessions chain only the scalar λ — the expensive part (pair
-    // join + gamma aggregation) is rule-independent, so collect every rule's
-    // pattern table in ONE Spark pass and run the chained driver EMs over the
-    // collected arrays; falls back to per-rule emTrain when the combined table
-    // exceeds the driver cap (the distributed path handles pathological widths)
-    val parsedRules = trainingRules.map(graft.blocking.BlockingRule.parse)
-    val batched = batchPatternTables(df, uid, specs, parsedRules, linkRight)
     parsedRules.zipWithIndex.foreach { case (rule, idx) =>
       val (lam, m, uEm) = batched match {
         case Some(byRule) =>
@@ -420,27 +442,33 @@ object Estimation {
     TrainedModel(lambda, specs, params, blockingRules)
   }
 
+  /** Rule index of the u pair table in [[batchPatternTables]]. */
+  private val URule = -1
+
   /** Agreement-pattern tables for several training rules in one Spark pass, keyed by
     * rule index. Each rule's pairs carry a rule tag through a single unioned gamma
     * aggregation over ALL spec columns; [[emFromPatterns]] marginalizes each table to
     * the rule's free columns on the driver (summing over the blocked columns' gammas
-    * is exactly the per-rule aggregation [[emTrain]] would have computed). Returns
-    * None when the combined table exceeds [[MaxDriverPatterns]] — callers then fall
-    * back to per-rule [[emTrain]].
+    * is exactly the per-rule aggregation [[emTrain]] would have computed). `uPairs`
+    * (random pairs, see [[uSamplePairs]]) joins the union last, tagged [[URule]].
+    * Returns None when the combined table exceeds [[MaxDriverPatterns]] — callers
+    * then fall back to per-rule [[emTrain]].
     */
   private def batchPatternTables(
       df: DataFrame,
       uid: String,
       specs: Seq[ComparisonSpec],
       rules: Seq[graft.blocking.BlockingRule],
-      linkRight: Option[DataFrame]): Option[Map[Int, Array[(Array[Int], Long)]]] = {
+      linkRight: Option[DataFrame],
+      uPairs: Option[DataFrame]): Option[Map[Int, Array[(Array[Int], Long)]]] = {
     // rules blocking on every compared column have nothing to estimate — skip them
     val active = rules.zipWithIndex.filter { case (r, _) =>
       val blocked = r.columns.toSet
       specs.exists(s => !blocked.contains(s.column))
     }
-    if (active.isEmpty) return Some(Map.empty)
+    if (active.isEmpty && uPairs.isEmpty) return Some(Map.empty)
     val attrs = (specs.map(_.column) ++ rules.flatMap(_.columns)).distinct
+    val pairCols = specs.flatMap(s => Seq(col(s"${s.column}_l"), col(s"${s.column}_r")))
     val tagged = active.map { case (rule, i) =>
       val pairs = linkRight match {
         case Some(right) =>
@@ -448,8 +476,8 @@ object Estimation {
         case None =>
           graft.blocking.PairGenerator.dedupePairs(df, uid, attrs, Seq(rule))
       }
-      pairs.withColumn("_rule_idx", lit(i))
-    }
+      pairs.select(pairCols :+ lit(i).as("_rule_idx"): _*)
+    } ++ uPairs.map(_.select(pairCols :+ lit(URule).as("_rule_idx"): _*))
     val gammaCols = specs.map(s => col(s"gamma_${s.column}"))
     val patterns = Comparisons.withGammas(tagged.reduce(_ unionByName _), specs)
       .groupBy((col("_rule_idx") +: gammaCols): _*)

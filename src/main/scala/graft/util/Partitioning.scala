@@ -52,17 +52,21 @@ object Partitioning {
     * gets 2–8 stores, a cluster-scale feed saturates at the parallelism cap.
     * Replaces the r11 per-op constants (4/8) with the same derive-from-data rule
     * the iterative graph loops use ([[adaptive]]).
+    *
+    * A source that does not exist yet counts as 0 bytes (one state partition).
+    * Any other failure to read its size (an unknown filesystem scheme, a
+    * permission error) propagates: sizing a real feed as empty would pin it to
+    * a single state store for the stream's lifetime.
     */
   def stateFromSource(
       spark: SparkSession,
       sourcePath: String,
       bytesPerPartition: Long): Int = {
+    val p = new org.apache.hadoop.fs.Path(sourcePath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(sourcePath)
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        fs.getContentSummary(p).getLength
-      } catch { case _: Throwable => 0L }
+      try fs.getContentSummary(p).getLength
+      catch { case _: java.io.FileNotFoundException => 0L }
     val cores = spark.sparkContext.defaultParallelism.toLong
     math.max(1L, math.min(cores, bytes / math.max(bytesPerPartition, 1L) + 1)).toInt
   }

@@ -187,12 +187,7 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("EM increases m for matching levels on a planted-duplicate dataset") {
-    // 30 entities, each duplicated with a 1-char typo in `b`; `blk` is a shared block key.
-    val rows = (0 until 30).flatMap { i =>
-      val base = f"name$i%03d"
-      Seq((s"u${i}_a", base, s"city$i", i % 3), (s"u${i}_b", base, s"city${i}x", i % 3))
-    }
-    val df = rows.toDF("id", "a", "b", "blk")
+    val df = LinkageSpec.plantedDuplicates(spark)
     val specs = Seq(ComparisonSpec("b", "levenshtein", 2))
     val u = Map("b" -> Array(0.9, 0.05, 0.05))
     val (lambda, m, _) = Estimation.emTrain(
@@ -205,11 +200,7 @@ class LinkageSpec extends SparkSpec {
   }
 
   test("EM driver-side and distributed paths produce identical estimates") {
-    val rows = (0 until 30).flatMap { i =>
-      val base = f"name$i%03d"
-      Seq((s"u${i}_a", base, s"city$i", i % 3), (s"u${i}_b", base, s"city${i}x", i % 3))
-    }
-    val df = rows.toDF("id", "a", "b", "blk")
+    val df = LinkageSpec.plantedDuplicates(spark)
     val specs = Seq(ComparisonSpec("a", "levenshtein", 1), ComparisonSpec("b", "levenshtein", 2))
     val u = Map("a" -> Array(0.9, 0.05, 0.05), "b" -> Array(0.9, 0.05, 0.05))
     val rule = graft.blocking.BlockingRule.parse("l.blk = r.blk")
@@ -374,5 +365,19 @@ class LinkageSpec extends SparkSpec {
       SortedNeighborhood.rank(df, col("k"), col("id")).collect()
     }
     assert(e.getMessage.contains("null sort keys"))
+  }
+}
+
+object LinkageSpec {
+  /** 30 entities, each duplicated with a 1-char typo in `b`; `blk` is a shared
+    * block key. Uid column `id`.
+    */
+  def plantedDuplicates(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    (0 until 30).flatMap { i =>
+      val base = f"name$i%03d"
+      Seq((s"u${i}_a", base, s"city$i", i % 3), (s"u${i}_b", base, s"city${i}x", i % 3))
+    }.toDF("id", "a", "b", "blk")
   }
 }
