@@ -39,8 +39,9 @@ import graft.train.Estimation
   * union-find and the information-gain metric both run on the driver
   * ([[clusterAndScore]]). The probe holds at most 1M / (2 + 2k) edges for k
   * attributes (the 1M strings connected components' own local path may hold);
-  * above that, or when components run distributed, the trial runs
-  * [[ConnectedComponents.assignClusters]] and the one-query distributed metric.
+  * above that the trial drops the probe and runs
+  * [[ConnectedComponents.assignClusters]] (local or distributed by its own
+  * probe) and the one-query distributed metric, so it pays one extra probe.
   * The driver path counts each matched record once, so uids must be unique:
   * the search checks this in its row count and fails otherwise.
   *
@@ -434,16 +435,17 @@ object AutoLinker {
   /** Driver edge cap of [[clusterAndScore]] for `k` attributes: each edge holds
     * 2 + 2k strings, and connected components' own local path may hold 1M.
     */
-  private[graft] def driverEdgeCap(k: Int): Long = 1000000L / (2 + 2 * k)
+  private[graft] def driverEdgeCap(k: Int): Int = 1000000 / (2 + 2 * k)
 
   /** A trial's clustering and its information-gain metric. One probe collects at
     * most `edgeCap` thresholded edges with both endpoints' attributes; when they
     * all fit, union-find ([[ConnectedComponents.localComponents]]) and the metric
     * ([[EntropyMetrics.informationGainPowerRatioLocal]]) run on the driver and
-    * the clusters frame stays lazy. Otherwise [[ConnectedComponents.assignClusters]]
-    * (local or distributed by `ccLocalThreshold`) and the distributed metric run.
-    * Either way the metric equals `informationGainPowerRatio` over the returned
-    * clusters bit for bit; the metric needs unique uids (see [[countUnique]]).
+    * the clusters frame stays lazy. Otherwise the probe is dropped and
+    * [[ConnectedComponents.assignClusters]] and the distributed metric run; that
+    * path pays the discarded probe on top of their own queries. Either way the
+    * metric equals `informationGainPowerRatio` over the returned clusters bit for
+    * bit; the metric needs unique uids (see [[countUnique]]).
     */
   private[graft] def clusterAndScore(
       predictions: DataFrame,
@@ -452,35 +454,47 @@ object AutoLinker {
       uidCol: String,
       attrs: Seq[String],
       adjustedBase: Int,
-      edgeCap: Long,
-      ccLocalThreshold: Long = 500000L): (DataFrame, Double) = {
-    val cap = math.min(edgeCap, ccLocalThreshold).toInt
+      edgeCap: Int): (DataFrame, Double) = {
     val edges = predictions.filter(col("match_probability") >= threshold)
+    clusterAndScoreOnDriver(edges, clusterBase, uidCol, attrs, adjustedBase, edgeCap)
+      .getOrElse {
+        val clusters = ConnectedComponents.assignClusters(clusterBase, uidCol,
+          edges.select(col("uid_l").as("src"), col("uid_r").as("dst")))
+        (clusters, EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase))
+      }
+  }
+
+  /** The driver path of [[clusterAndScore]], or None when more than `edgeCap`
+    * edges pass the threshold. The probe's rows are unreachable once this
+    * returns, so the fallback never holds them beside its own probe.
+    */
+  private def clusterAndScoreOnDriver(
+      edges: DataFrame,
+      clusterBase: DataFrame,
+      uidCol: String,
+      attrs: Seq[String],
+      adjustedBase: Int,
+      edgeCap: Int): Option[(DataFrame, Double)] = {
     val probe = edges
       .filter(col("uid_l") =!= col("uid_r"))
       .select((Seq("uid_l", "uid_r") ++ attrs.map(a => s"${a}_l") ++ attrs.map(a => s"${a}_r"))
         .map(col): _*)
-      .limit(cap + 1).collect()
-    if (probe.length <= cap) {
-      val k = attrs.size
-      val values = scala.collection.mutable.HashMap.empty[String, Array[String]]
-      probe.foreach { r =>
-        values.getOrElseUpdate(r.getString(0), Array.tabulate(k)(i => r.getString(2 + i)))
-        values.getOrElseUpdate(r.getString(1), Array.tabulate(k)(i => r.getString(2 + k + i)))
-      }
-      val mapping = ConnectedComponents.localComponents(
-        probe.map(r => (r.getString(0), r.getString(1))))
-      val metric = EntropyMetrics.informationGainPowerRatioLocal(
-        mapping.map { case (node, cid) => (cid, values(node)) }, k, adjustedBase)
-      val spark = clusterBase.sparkSession
-      import spark.implicits._
-      (ConnectedComponents.withClusterIds(clusterBase, uidCol,
-        mapping.toDF("node", "cluster_id")), metric)
-    } else {
-      val clusters = ConnectedComponents.assignClusters(clusterBase, uidCol,
-        edges.select(col("uid_l").as("src"), col("uid_r").as("dst")), ccLocalThreshold)
-      (clusters, EntropyMetrics.informationGainPowerRatio(clusters, attrs, adjustedBase))
+      .limit(edgeCap + 1).collect()
+    if (probe.length > edgeCap) return None
+    val k = attrs.size
+    val values = scala.collection.mutable.HashMap.empty[String, Array[String]]
+    probe.foreach { r =>
+      values.getOrElseUpdate(r.getString(0), Array.tabulate(k)(i => r.getString(2 + i)))
+      values.getOrElseUpdate(r.getString(1), Array.tabulate(k)(i => r.getString(2 + k + i)))
     }
+    val mapping = ConnectedComponents.localComponents(
+      probe.map(r => (r.getString(0), r.getString(1))))
+    val metric = EntropyMetrics.informationGainPowerRatioLocal(
+      mapping.map { case (node, cid) => (cid, values(node)) }, k, adjustedBase)
+    val spark = clusterBase.sparkSession
+    import spark.implicits._
+    Some((ConnectedComponents.withClusterIds(clusterBase, uidCol,
+      mapping.toDF("node", "cluster_id")), metric))
   }
 
   /** First row of a 1-row metric frame as name → double (longs widened). */

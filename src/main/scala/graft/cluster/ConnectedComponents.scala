@@ -201,12 +201,8 @@ object ConnectedComponents {
   /** Attaches records: adds `cluster_id` (own uid for singletons) — the reference's
     * output shape (input ∪ cluster_id, autolinker.py:133,195-196).
     */
-  def assignClusters(
-      records: DataFrame,
-      uid: String,
-      edges: DataFrame,
-      localThreshold: Long = 500000L): DataFrame =
-    withClusterIds(records, uid, run(edges, localThreshold = localThreshold))
+  def assignClusters(records: DataFrame, uid: String, edges: DataFrame): DataFrame =
+    withClusterIds(records, uid, run(edges))
 
   /** Attaches a `node → cluster_id` mapping (from [[run]] or [[localComponents]])
     * to the records, as [[assignClusters]] does.

@@ -396,19 +396,21 @@ object Estimation {
     // A search loop training many candidate models passes the prebuilt sampled
     // pair table (uPairs): it rides the same pass as pseudo-rule URule, and u is
     // its pattern counts marginalized per column — the integers gammaCounts
-    // would produce, so u is the same double. Over the cap, u and the rule
-    // tables are computed separately, exactly as without uPairs.
+    // would produce, so u is the same double. Over the cap, u is computed from
+    // the pairs on its own and every rule runs emTrain; the failed combined pass
+    // is not retried without the u pairs.
     val parsedRules = trainingRules.map(graft.blocking.BlockingRule.parse)
-    def rulesOnly = batchPatternTables(df, uid, specs, parsedRules, linkRight, None)
     val (uSampled, batched) = uPairs match {
       case Some(p) =>
         batchPatternTables(df, uid, specs, parsedRules, linkRight, Some(p)) match {
           case Some(tables) =>
             (uFromCounts(marginalCounts(tables.getOrElse(URule, Array.empty), specs), specs),
               Some(tables - URule))
-          case None => (estimateUFromPairs(p, specs), rulesOnly)
+          case None => (estimateUFromPairs(p, specs), None)
         }
-      case None => (estimateU(uSource, uid, specs, uTargetPairs, uHashShuffle), rulesOnly)
+      case None =>
+        (estimateU(uSource, uid, specs, uTargetPairs, uHashShuffle),
+          batchPatternTables(df, uid, specs, parsedRules, linkRight, None))
     }
 
     val mEstimates = scala.collection.mutable.Map[String, List[Array[Double]]]()
