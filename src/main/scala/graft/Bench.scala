@@ -175,14 +175,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val filter = args.headOption.map(_.r)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt)
     // untimed JVM/codegen warm-up: without it the alphabetically-first query absorbs
     // classloading + whole-stage-codegen compiler start-up and reads several× slower
     // than steady state
@@ -208,7 +201,10 @@ object Bench {
     val selected = SparkEntry.queries
       .filter { case (name, _) => filter.forall(_.findFirstIn(name).isDefined) }
       .toSeq.sortBy(_._1)
-    val prior = priorTimings(sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_FULL.json"))
+    // the prior is the record at this core count: a query's seconds at 8 cores say
+    // nothing about whether its 32-core timing is an outlier (missing file = no prior)
+    val prior = priorTimings(
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", s"BENCH_FULL_c$cpus.json"))
     def timeOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : (Double, Option[String]) = {
       val t0 = System.nanoTime()
@@ -222,12 +218,7 @@ object Bench {
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(300)}")
         }
       val sec = (System.nanoTime() - t0) / 1e9
-      // drop cached plans and leftover localCheckpoint blocks — iterative operators
-      // otherwise accumulate storage across queries and degrade later ones via GC churn
-      // (releaseAll drains any unscoped operator persists the bracket didn't cover)
-      graft.util.Caching.releaseAll()
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Session.releaseQueryState(spark)
       // ContextCleaner is GC-driven: with a large heap the JVM may not GC for the whole
       // suite, so unreferenced shuffle/broadcast state accumulates and later queries
       // degrade several-fold. Force a collection between queries to let it drain.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,18 +10,12 @@ object Verify {
     val nameFilter = args.lift(2).map(_.r)
     def selected(name: String) = nameFilter.forall(_.findFirstIn(name).isDefined)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.filter(q => selected(q._1)).foreach { case (name, fn) =>
       // withCached releases the operator-internal persists as soon as the write
-      // materializes; clearCache below stays as a backstop for localCheckpoints
+      // materializes; releaseQueryState below stays as a backstop for localCheckpoints
       try graft.util.Caching.withCached {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
@@ -32,11 +25,7 @@ object Verify {
         System.err.println(s"[verify] $name FAILED: $msg")
         failures(name) = msg
       }
-      // free cached plans + leftover localCheckpoint blocks between queries
-      // (releaseAll drains any unscoped operator persists the bracket didn't cover)
-      graft.util.Caching.releaseAll()
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      Session.releaseQueryState(spark)
     }
     def q(s: String): String = graft.util.Render.jsonString(s)
     val json = SparkEntry.oracleSql

@@ -26,8 +26,8 @@ import graft.train.Estimation
   *     warmup, good/bad Parzen densities over every dimension score a candidate
   *     batch by the l/g expected-improvement ratio — with one seeded RNG threaded
   *     through sampling, bucketing and the search so runs reproduce
-  *     (`searchStrategy = "adaptive"` keeps the earlier perturb-the-top-quartile
-  *     TPE-lite; `"random"` recovers pure random search);
+  *     (`searchStrategy = "random"` recovers pure random search; any other name
+  *     fails);
   *   - no metastore temp tables to GC (Y15) — intermediates are DataFrames;
   *   - no run log yet: the reference logs every trial to MLflow; a per-trial
   *     run log (Y19) is not built, and [[Result.trials]] is all that is kept.
@@ -101,6 +101,7 @@ object AutoLinker {
       candidateRuleOverride: Option[Seq[String]] = None,
       uDeterministicOrder: Boolean = false): Result = {
 
+    requireKnownStrategy(searchStrategy)
     val rnd = new Random(seed)
     val withId = Cleaning.withUniqueId(data, uidCol)
     val attrs = attributeColumns.getOrElse(
@@ -158,6 +159,7 @@ object AutoLinker {
       uDeterministicOrder: Boolean = false,
       mappingOverride: Option[Seq[(String, String, Long)]] = None): Result = {
 
+    requireKnownStrategy(searchStrategy)
     val rnd = new Random(seed)
     val lAttrs = leftAttributes.getOrElse(
       left.columns.filterNot(c => c == uidCol || trueLabelCol.contains(c)).toSeq)
@@ -237,11 +239,13 @@ object AutoLinker {
     } finally candidates.unpersist()
   }
 
+  private def requireKnownStrategy(strategy: String): Unit =
+    require(strategy == "tpe" || strategy == "random",
+      s"searchStrategy must be \"tpe\" or \"random\", got \"$strategy\"")
+
   /** One parameter draw. Uniform during warmup or with `searchStrategy = "random"`;
-    * `"tpe"` (the default — full Hyperopt-parity [[Tpe]] draw: Parzen good/bad
-    * densities + l/g-ratio acquisition over a candidate batch); `"adaptive"` keeps
-    * the round-5 TPE-lite (perturb a top-quartile parent with an exploration
-    * floor) for comparison runs.
+    * otherwise `"tpe"` (the default — full Hyperopt-parity [[Tpe]] draw: Parzen
+    * good/bad densities + l/g-ratio acquisition over a candidate batch).
     */
   private def drawParams(
       rnd: Random,
@@ -259,33 +263,12 @@ object AutoLinker {
 
     val warmup = 3
     if (strategy == "random" || past.size < warmup) uniform()
-    else if (strategy == "tpe") {
-      // 10% uniform exploration floor: the l/g acquisition is pure exploitation
-      // and can permanently avoid a region whose only observations landed in the
-      // bad set — the floor bounds that regret (hyperopt gets the same effect
-      // from its annealed prior weight)
-      if (rnd.nextDouble() < 0.1) uniform() else Tpe.draw(rnd, attrs, ruleChoices, past)
-    } else if (strategy != "adaptive") uniform()
-    else if (rnd.nextDouble() < 0.3) uniform()
-    else {
-      val top = past.sortBy(-_.metric).take(math.max(1, past.size / 4 + 1))
-      val parent = top(rnd.nextInt(top.size))
-      val specs = parent.model.comparisons.map { s =>
-        if (rnd.nextDouble() < 0.2) uniformSpec(s.column)
-        else s.metric match {
-          case "levenshtein" =>
-            s.copy(threshold =
-              math.max(1.0, math.min(5.0, s.threshold + (rnd.nextInt(3) - 1))))
-          case _ =>
-            s.copy(threshold =
-              math.max(0.7, math.min(0.99, s.threshold + rnd.nextGaussian() * 0.03)))
-        }
-      }
-      val rule =
-        if (rnd.nextDouble() < 0.7) parent.blockingRule
-        else ruleChoices(rnd.nextInt(ruleChoices.size))
-      (specs, rule)
-    }
+    // 10% uniform exploration floor: the l/g acquisition is pure exploitation
+    // and can permanently avoid a region whose only observations landed in the
+    // bad set — the floor bounds that regret (hyperopt gets the same effect
+    // from its annealed prior weight)
+    else if (rnd.nextDouble() < 0.1) uniform()
+    else Tpe.draw(rnd, attrs, ruleChoices, past)
   }
 
   /** One full trial draw: comparison specs + blocking rule ([[drawParams]]) plus the

@@ -1,13 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for declared queries to files — the before/after
   * plan evidence for optimization rounds (`plans/rNN/<query>_{before,after}.txt`).
   *
   * Usage: `sbt "runMain graft.tools.ExplainDump <outDir> <suffix> <regex>"` —
   * writes `<outDir>/<query>_<suffix>.txt` for every declared query matching the
-  * regex. Reads SPARK_GRAFT_SF_DIR (default sf0.1). Plans are the ANALYZED
+  * regex. Reads SPARK_GRAFT_SF_DIR (default sf0.1) and SPARK_GRAFT_CPUS (default
+  * 32), so the plans are Bench's at that core count. Plans are the ANALYZED
   * physical plans before execution (AQE `isFinalPlan=false`), which is what the
   * plan-shape claims (Exchange count, join strategy, PushedFilters, ReadSchema)
   * are graded on.
@@ -21,14 +20,7 @@ object ExplainDump {
     val pattern = args(2).r
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(outDir)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     graft.SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => pattern.findFirstIn(name).isDefined }
       .foreach { case (name, fn) =>
@@ -43,9 +35,7 @@ object ExplainDump {
         } catch { case e: Throwable =>
           System.err.println(s"[explain] $name FAILED: ${e.getMessage}")
         } finally {
-          graft.util.Caching.releaseAll()
-          spark.sqlContext.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+          graft.Session.releaseQueryState(spark)
         }
       }
     spark.stop()

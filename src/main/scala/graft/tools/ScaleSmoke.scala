@@ -109,13 +109,7 @@ object ScaleSmoke {
       only.map(p => s" filter=$p").getOrElse(""))
     require(pats.length <= 1, s"at most one name filter, got: ${pats.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    implicit val spark: SparkSession = graft.Session.local(cpus.toInt)
     for (n <- sizes) {
       val docs = corpus(spark, n).persist()
       docs.count() // materialize outside the timed section
@@ -399,9 +393,7 @@ object ScaleSmoke {
       }
       evalDocs.unpersist()
       vecs.unpersist()
-      graft.util.Caching.releaseAll()
-      spark.sqlContext.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+      graft.Session.releaseQueryState(spark)
       System.gc()
     }
     spark.stop()

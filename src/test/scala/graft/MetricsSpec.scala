@@ -269,12 +269,21 @@ class MetricsSpec extends SparkSpec {
       attributeColumns = Some(Seq("name", "city", "zip")),
       maxEvals = 5, seed = 3L, comparisonSizeLimit = 1000000L, clusterThreshold = 0.5,
       searchStrategy = strategy).best.metric
-    val adaptive = run("adaptive")
     val random = run("random")
-    assert(adaptive >= random - 1e-9, s"adaptive=$adaptive random=$random")
-    // the native TPE default must also hold its own against random at equal budget
+    // the native TPE default must hold its own against random at equal budget
     val tpe = run("tpe")
     assert(tpe >= random - 1e-9, s"tpe=$tpe random=$random")
+  }
+
+  test("auto-link rejects an unknown search strategy instead of running random search") {
+    val df = Seq(("a", "x"), ("b", "y")).toDF("unique_id", "name")
+    for (name <- Seq("adaptive", "TPE", "hyperopt")) {
+      val e = intercept[IllegalArgumentException](
+        AutoLinker.autoLink(df, searchStrategy = name))
+      assert(e.getMessage.contains(name), e.getMessage)
+      intercept[IllegalArgumentException](
+        AutoLinker.autoLinkTables(df, df, searchStrategy = name))
+    }
   }
 
   // ---- expectations ---------------------------------------------------------
